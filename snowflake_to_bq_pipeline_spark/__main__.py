@@ -45,8 +45,9 @@ def main(argv: list[str] | None = None) -> int:
     # NOTE: no clear-caches subcommand — the cross-query memos are
     # per-process, so a fresh CLI process has nothing to clear. Embedded
     # long-lived sessions call registry.clear_model_caches() directly
-    # (as tools/scale_smoke.py does); the memos also self-invalidate via
-    # corpus file fingerprints and are LRU-bounded (registry._ModelMemo).
+    # (as tools/scale_smoke.py does); every @standing_index memo also
+    # self-invalidates via corpus file fingerprints, and model memos are
+    # LRU-bounded.
 
     args = p.parse_args(argv)
 

@@ -208,53 +208,6 @@ def _order_grain_select(orders: DataFrame, li: DataFrame) -> DataFrame:
     )
 
 
-def _allocation_summary(lineitem: DataFrame) -> DataFrame:
-    """Budget-allocation aggregate per (order, contributor).
-
-    Plays the v5 view's IndividualBudgetSummary role (L53-105).
-    """
-    return (
-        lineitem.filter(F.col("l_returnflag").isin("A", "R"))
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(
-            money(
-                F.sum(net_price(F.col("l_extendedprice"), F.col("l_discount")))
-            ).alias("ind_budget_amount"),
-            money(F.sum("l_quantity")).alias("ind_budget_qty"),
-            F.count(F.lit(1)).alias("allocation_count"),
-        )
-    )
-
-
-def _time_entry_summary(lineitem: DataFrame) -> DataFrame:
-    """Logged-time aggregate per (order, contributor).
-
-    Plays the v5 view's IndividualTimeEntrySummary role (L11-37);
-    ``l_tax > 0`` stands in for IS_BILLABLE.
-    """
-    net_mic = money_micros(
-        net_price(F.col("l_extendedprice"), F.col("l_discount"))
-    )
-    return (
-        lineitem.filter(F.col("l_returnflag") == "N")
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(
-            money_from_micros_sum(F.sum(net_mic)).alias("ind_actual_amount"),
-            money_from_micros_sum(
-                F.sum(
-                    F.when(F.col("l_tax") > 0, net_mic).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                )
-            ).alias("ind_billable_amount"),
-            money(F.sum("l_quantity")).alias("ind_actual_qty"),
-            F.count(F.lit(1)).alias("time_entry_count"),
-            F.min("l_shipdate").alias("first_entry_date"),
-            F.max("l_shipdate").alias("last_entry_date"),
-        )
-    )
-
-
 def individual_budget_tracking(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Per-(order, contributor) budget vs actual — the v5 flagship.
 

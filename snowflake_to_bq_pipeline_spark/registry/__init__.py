@@ -10,318 +10,61 @@ round(x, 2) doubles on BOTH sides — see functions.DEC for why.
 
 from __future__ import annotations
 
-from ._core import (QueryFn, QUERIES, ORACLES, query, _corpus_fingerprint, _ModelMemo)  # noqa: F401
-from . import section_a_sync as _a_sync
-from . import section_b_analytics as _b_analytics
-from . import section_c_monitoring as _c_monitoring
-from . import section_d_classic as _d_classic
-from . import section_e_text as _e_text
-from . import section_e_similarity as _e_similarity
-from . import section_f_streaming as _f_streaming
-
-from .section_a_sync import (  # noqa: F401
-    _PAGE,
-    _PAGE_SIZE,
-    backfill_progress_q,
-    cdc_fold_snapshot_q,
-    chunked_backfill_plan_q,
-    column_value_drift_q,
-    dedup_latest_record_q,
-    full_sync_snapshot,
-    incremental_agg_maintenance_q,
-    incremental_sync_window,
-    merge_upsert_q,
-    missing_records_q,
-    orphaned_records_q,
-    paginated_extract_q,
-    snapshot_changelog_q,
-    stale_snapshot_audit_q,
-    sync_date_dedup_q,
+from ._core import (  # noqa: F401
+    ORACLES,
+    QUERIES,
+    STANDING_INDEXES,
+    QueryFn,
+    _corpus_fingerprint,
+    _ModelMemo,
+    _release,
+    query,
+    standing_index,
 )
-from .section_b_analytics import (  # noqa: F401
-    _BUDGET_ROLLUP_CACHE,
-    _NET,
-    _PIVOT_YEAR,
-    _budget_rollup_for,
-    asof_join_q,
-    bom_per_case_q,
-    budget_fallback_allocation_q,
-    budget_vs_actual_q,
-    click_attribution_q,
-    client_budget_rollup_q,
-    contributor_utilization_rollup_q,
-    customer_revenue_deciles_q,
-    event_lateness_profile_q,
-    event_session_stats_q,
-    event_sessions_q,
-    funnel_conversion_q,
-    individual_budget_tracking_q,
-    monthly_hours_pivot_q,
-    open_orders_by_day_q,
-    reporting_lag_q,
-    retention_cohorts_q,
-    rolling_revenue_7d_q,
-    sales_rollup_sets_q,
-    scd2_status_history_q,
-    user_activity_trend_q,
-    user_running_totals_q,
-    utilization_rollup_q,
-    view_variance_detection_q,
-    work_item_enriched_q,
+from . import (
+    section_a_sync,
+    section_b_analytics,
+    section_c_monitoring,
+    section_d_classic,
+    section_e_text,
+    section_e_similarity,
+    section_f_streaming,
 )
-from .section_c_monitoring import (  # noqa: F401
-    _ALERTS_CACHE,
-    _ALERTS_SQL_CTES,
-    _PROFILE_COLS,
-    _alerts_for,
-    alert_digest_q,
-    data_quality_metrics_q,
-    distribution_drift_psi_q,
-    dup_key_audit_q,
-    freshness_check_q,
-    json_props_profile_q,
-    key_skew_profile_q,
-    mad_outlier_profile_q,
-    multivariate_anomaly_q,
-    pipeline_alerts_q,
-    robust_value_stats_q,
-    row_count_by_day_q,
-    row_count_compare_q,
-    status_flap_q,
-    volume_anomaly_dow_q,
-    volume_anomaly_q,
-)
-from .section_d_classic import (  # noqa: F401
-    bloom_filtered_entries_q,
-    q10_q,
-    q11_q,
-    q12_q,
-    q13_q,
-    q14_q,
-    q15_q,
-    q16_q,
-    q17_q,
-    q18_q,
-    q19_q,
-    q1_q,
-    q20_q,
-    q21_q,
-    q22_q,
-    q2_q,
-    q3_q,
-    q4_q,
-    q5_q,
-    q6_q,
-    q7_q,
-    q8_q,
-    q9_q,
-)
-from .section_e_text import (  # noqa: F401
-    _BPE_MERGE_CACHE,
-    _CHARLM_REF,
-    _DSIR_SELECT_FRAC,
-    _DSIR_TARGET,
-    _DOC_WORD_CACHE,
-    _DSIR_W_CACHE,
-    _DSIR_W_SQL,
-    _FUNNEL_TOKEN_RE,
-    _GOPHER_STOP_SQL,
-    _MIX_RATES,
-    _NBQ_MODEL_CACHE,
-    _NBQ_SCORES_CACHE,
-    _PII_AUG_SPARK,
-    _PII_AUG_SQL,
-    _SHARD_RANK_SQL,
-    _TOK_COUNTS_CACHE,
-    _UNIGRAM_VOCAB_CACHE,
-    _WORD_TOKENS_CACHE,
-    _bpe_merges_for,
-    _doc_word_for,
-    _dsir_weights_for,
-    _nbq_model_for,
-    _nbq_scores_for,
-    _tok_counts_for,
-    _unigram_vocab_for,
-    _word_tokens_for,
-    bpe_encode_tokens_q,
-    bpe_merge_table_q,
-    char_entropy_q,
-    charlm_perplexity_q,
-    classifier_gate_funnel_q,
-    dataset_split_assign_q,
-    dedup_token_savings_by_source_q,
-    doc_length_histogram_q,
-    dsir_importance_weights_q,
-    dsir_select_topk_q,
-    error_window_events_q,
-    gopher_quality_rules_q,
-    group_percentiles_exact_q,
-    lang_id_q,
-    length_curriculum_buckets_q,
-    pack_fill_summary_q,
-    pii_redaction_q,
-    priority_sample_docs_q,
-    quality_classifier_report_q,
-    quality_classifier_scores_q,
-    quality_filter_funnel_q,
-    repetition_filter_q,
-    sequence_packing_q,
-    shard_assignment_balanced_q,
-    shard_balance_summary_q,
-    sketch_distinct_users_q,
-    sketch_value_quantiles_q,
-    source_language_mix_q,
-    source_mix_temperature_q,
-    source_mix_weights_q,
-    source_quality_report_q,
-    stratified_sample_q,
-    text_quality_score_q,
-    text_stats_q,
-    token_count_bpe_q,
-    tokenizer_fertility_by_source_q,
-    unigram_encode_tokens_q,
-    unigram_vocab_table_q,
-    vocab_coverage_q,
-    vocab_top_k_q,
-)
-from .section_e_similarity import (  # noqa: F401
-    _ANN_DIMS,
-    _ASSIGN_CACHE,
-    _BRUTE_TOPK_CACHE,
-    _CENTROID_CACHE,
-    _CHUNK_ASSIGN_CACHE,
-    _CHUNK_CENTROID_CACHE,
-    _CONTAINMENT_TAU,
-    _COS_SQL,
-    _DUP_CLUSTERS_CACHE,
-    _DUP_COS_TAU,
-    _EMBDOC_PAIRS_CACHE,
-    _EVAL_SOURCE,
-    _GUARD_STATS_CACHE,
-    _INCR_BLOOM_CACHE,
-    _JACCARD_PAIRS_CACHE,
-    _JACCARD_TAU,
-    _MINHASH_PAIRS_CACHE,
-    _MINHASH_SIGS_CACHE,
-    _SEM_GROUPS_CACHE,
-    _SHINGLE_CACHE,
-    _SEMDEDUP_CACHE,
-    _SPANS_CACHE,
-    _SPAN_ANCHORS_CACHE,
-    _SHINGLE_SQL,
-    _SIMHASH_SIG_CACHE,
-    _SUBSTR_S,
-    _SUBSTR_W,
-    _TFIDF_SIM_TAU,
-    _TFIDF_TOPK_CACHE,
-    _RECALL_SCORED_CACHE,
-    _assigned_for,
-    _brute_topk_for,
-    _recall_scored_for,
-    _centroids_for,
-    _chunk_index_for,
-    _dup_clusters_for,
-    _embdoc_pairs_for,
-    _guard_stats_for,
-    _sem_groups_for,
-    _spans_for,
-    _span_anchors_for,
-    _incr_bloom_for,
-    _ivfpq_coded_for,
-    _ivfpq_model_for,
-    _jaccard_pairs_for,
-    _lsh_buckets_for,
-    _minhash_pairs_for,
-    _minhash_sigs_for,
-    _pq_codes_for,
-    _pq_model_for,
-    _semdedup_for,
-    _shingles_for,
-    _simhash_sigs_for,
-    _tfidf_topk_for,
-    ann_cosine_topk_q,
-    ann_ivf_incremental_topk_q,
-    chunk_ann_topk_q,
-    ann_ivf_list_drift_q,
-    ann_ivf_topk_q,
-    ann_ivfpq_topk_q,
-    ann_lsh_topk_q,
-    ann_pq_topk_q,
-    boilerplate_phrase_profile_q,
-    cluster_quality_report_q,
-    cross_split_contamination_q,
-    dataset_split_assign_cluster_safe_q,
-    decontamination_overlap_q,
-    dedup_cluster_size_histogram_q,
-    dedup_clusters_q,
-    dedup_exact_q,
-    dedup_provenance_rollup_q,
-    substring_dup_spans_q,
-    dedup_minhash_lsh_q,
-    dedup_savings_report_q,
-    dedup_simhash_q,
-    doc_fingerprint_q,
-    doc_novelty_q,
-    embedding_doc_dedup_q,
-    embedding_dup_pairs_q,
-    embedding_norm_profile_q,
-    embedding_outlier_topk_q,
-    incremental_dedup_check_q,
-    incremental_span_check_q,
-    kmeans_doc_clusters_q,
-    minhash_recall_q,
-    near_dup_rate_by_source_q,
-    ngram_containment_q,
-    ngram_jaccard_dups_q,
-    paragraph_dedup_q,
-    pq_compression_stats_q,
-    semdedup_prune_q,
-    span_cut_rollup_q,
-    split_leakage_compare_q,
-    substring_dup_profile_q,
-    tfidf_doc_similarity_q,
-    tfidf_top_terms_q,
-)
-from .section_f_streaming import (  # noqa: F401
-    events_windowed_counts_q,
-    streaming_ivf_assign_twin_q,
-    streaming_quality_score_twin_q,
-    streaming_near_dedup_twin_q,
-    streaming_near_dedup_verified_twin_q,
-)
-
 
 _SECTION_MODULES = (
-    _a_sync, _b_analytics, _c_monitoring, _d_classic,
-    _e_text, _e_similarity, _f_streaming,
+    section_a_sync, section_b_analytics, section_c_monitoring,
+    section_d_classic, section_e_text, section_e_similarity,
+    section_f_streaming,
 )
+
+
+def _reexport(modules) -> None:
+    """Bind every top-level name of the section modules in this package,
+    so ``registry.<name>`` reaches any query, helper or memo; a name bound
+    to two different objects fails the import."""
+    ns = globals()
+    for mod in modules:
+        for name, obj in vars(mod).items():
+            if not name.startswith("__"):
+                assert ns.setdefault(name, obj) is obj, f"registry name clash: {name}"
+
+
+_reexport(_SECTION_MODULES)
 
 
 def _all_caches() -> dict:
-    """Every module-level ``*_CACHE`` across the section modules —
-    discovered, not hand-listed, so a new memo can never silently escape
-    ``clear_model_caches()`` (tests/test_cache_invalidation.py guards the
-    same invariant from the outside via ``vars(registry)``)."""
-    out = {}
-    for mod in _SECTION_MODULES:
-        for name, obj in vars(mod).items():
-            if name.endswith("_CACHE"):
-                out[name] = obj
-    return out
+    """Helper name -> memo of every registered standing index."""
+    return {name: helper.cache for name, helper in STANDING_INDEXES.items()}
 
 
 def clear_model_caches() -> None:
-    """Explicit invalidation hook for every cross-query memo (pair tables,
+    """Explicit invalidation hook for every standing index (pair tables,
     k-means centroids, BPE merges, DSIR weights) — the embedded-session
     hard-reset API (used by tools/scale_smoke.py) regardless of
     fingerprints."""
     for cache in _all_caches().values():
-        values = (
-            cache._d.values() if isinstance(cache, _ModelMemo) else cache.values()
-        )
-        for v in values:
-            if hasattr(v, "unpersist"):
-                v.unpersist(blocking=False)
+        for v in cache.values():
+            _release(v)
         cache.clear()
     from ..catalog import clear_table_cache
 
@@ -588,42 +331,7 @@ ORACLES = {name: ORACLES[name] for name in _WINDOW_ORDER if name in ORACLES}
 # can never silently escape the flag.
 # ---------------------------------------------------------------------------
 
-_MEMO_HELPERS = (
-    "_semdedup_for",
-    "_spans_for",
-    "_span_anchors_for",
-    "_shingles_for",
-    "_simhash_sigs_for",
-    "_guard_stats_for",
-    "_jaccard_pairs_for",
-    "_dup_clusters_for",
-    "_embdoc_pairs_for",
-    "_sem_groups_for",
-    "_minhash_pairs_for",
-    "_minhash_sigs_for",
-    "_tok_counts_for",
-    "_doc_word_for",
-    "_nbq_scores_for",
-    "_nbq_model_for",
-    "_word_tokens_for",
-    "_centroids_for",
-    "_chunk_index_for",
-    "_assigned_for",
-    "_brute_topk_for",
-    "_recall_scored_for",
-    "_bpe_merges_for",
-    "_dsir_weights_for",
-    "_unigram_vocab_for",
-    "_alerts_for",
-    "_budget_rollup_for",
-    "_incr_bloom_for",
-    "_tfidf_topk_for",
-    "_lsh_buckets_for",
-    "_pq_model_for",
-    "_pq_codes_for",
-    "_ivfpq_model_for",
-    "_ivfpq_coded_for",
-)
+_MEMO_HELPERS = tuple(STANDING_INDEXES)
 
 def _memo_helpers_called(fn) -> frozenset:
     """Memo helpers a function's CODE actually calls.
@@ -652,7 +360,7 @@ def _memo_helpers_called(fn) -> frozenset:
     return frozenset(h for h in _MEMO_HELPERS if h in called)
 
 _HELPER_DEPS = {
-    h: _memo_helpers_called(globals()[h]) - {h} for h in _MEMO_HELPERS
+    h: _memo_helpers_called(STANDING_INDEXES[h]) - {h} for h in _MEMO_HELPERS
 }
 
 def _memo_closure(helpers) -> frozenset:

@@ -3,9 +3,13 @@ infrastructure shared by every section module."""
 
 from __future__ import annotations
 
+import functools
+import inspect
+from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -53,40 +57,93 @@ def _corpus_fingerprint(sf_dir: str, *tables: str) -> str:
     return h.hexdigest()
 
 
-class _ModelMemo:
+class _ModelMemo(OrderedDict):
     """LRU-bounded memo for driver-resident trained model state (collected
     centroid/merge rows — O(model), never O(corpus)).
 
     Keys are ``(sf_dir, fingerprint, *params)``. ``put`` first drops
-    entries for the same ``sf_dir`` whose fingerprint is superseded (the
-    single-live-snapshot lifecycle the DataFrame pair-table memos use),
-    then evicts least-recently-used entries beyond ``maxsize`` so a
-    long-lived session cycling many corpora stays bounded.
-    ``clear_model_caches()`` remains the manual hard-reset hook."""
+    entries for the same ``sf_dir`` whose fingerprint is superseded, then
+    evicts least-recently-used entries beyond ``maxsize`` so a long-lived
+    session cycling many corpora stays bounded."""
 
     def __init__(self, maxsize: int = 8) -> None:
-        from collections import OrderedDict
-
-        self._d: "OrderedDict[tuple, object]" = OrderedDict()
+        super().__init__()
         self.maxsize = maxsize
 
     def get(self, key: tuple):
-        v = self._d.get(key)
+        v = super().get(key)
         if v is not None:
-            self._d.move_to_end(key)
+            self.move_to_end(key)
         return v
 
     def put(self, key: tuple, value) -> None:
-        for k in [k for k in self._d if k[0] == key[0] and k[1] != key[1]]:
-            del self._d[k]
-        self._d[key] = value
-        self._d.move_to_end(key)
-        while len(self._d) > self.maxsize:
-            self._d.popitem(last=False)
+        for k in [k for k in self if k[0] == key[0] and k[1] != key[1]]:
+            del self[k]
+        self[key] = value
+        self.move_to_end(key)
+        while len(self) > self.maxsize:
+            self.popitem(last=False)
 
-    def clear(self) -> None:
-        self._d.clear()
 
-    def __len__(self) -> int:
-        return len(self._d)
+#: helper name -> registered standing-index helper, in registration order;
+#: each helper's ``cache`` attribute is its long-lived memo.
+STANDING_INDEXES: dict[str, Callable] = {}
 
+
+def _release(value) -> None:
+    """Unpersist the DataFrames of a cached value (a frame, or a tuple
+    holding frames); driver-side model state has nothing to release."""
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            v.unpersist(blocking=False)
+
+
+def standing_index(*tables: str, kind: str = "df", view: Callable | None = None):
+    """Register a cross-query memo over ``tables`` of a corpus snapshot.
+
+    The helper body only builds and returns the value. The decorator keys
+    it on ``(sf_dir, _corpus_fingerprint(sf_dir, *tables), *params)`` —
+    params bound through the helper's signature with defaults applied, so a
+    positional and a keyword call share one entry — and owns its lifecycle:
+
+    - ``kind="df"``: a dict of persisted DataFrames. Before a build, every
+      entry of another ``(sf_dir, fingerprint)`` is unpersisted and evicted
+      (all params of the live snapshot stay live together); the built frame
+      is persisted MEMORY_AND_DISK unless the body already persisted it.
+    - ``kind="model"``: a :class:`_ModelMemo` of driver-side model state.
+
+    ``view(spark, value, **options)`` turns the cached value into what a
+    call returns; the helper's keyword-only parameters are those options
+    and stay out of the key."""
+
+    def deco(fn):
+        sig = inspect.signature(fn)
+        options = [n for n, p in sig.parameters.items() if p.kind is p.KEYWORD_ONLY]
+        cache = {} if kind == "df" else _ModelMemo()
+
+        @functools.wraps(fn)
+        def helper(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            params = [v for n, v in bound.arguments.items() if n not in options]
+            key = (sf_dir, _corpus_fingerprint(sf_dir, *tables), *params[2:])
+            value = cache.get(key)
+            if value is None and kind == "model":
+                value = fn(*bound.args, **bound.kwargs)
+                cache.put(key, value)
+            elif value is None:
+                for old in [k for k in cache if k[:2] != key[:2]]:
+                    _release(cache.pop(old))
+                value = fn(*bound.args, **bound.kwargs)
+                if isinstance(value, DataFrame) and not value.is_cached:
+                    value = value.persist(StorageLevel.MEMORY_AND_DISK)
+                cache[key] = value
+            if view is None:
+                return value
+            return view(spark, value, **{n: bound.arguments[n] for n in options})
+
+        helper.cache = cache
+        STANDING_INDEXES[fn.__name__] = helper
+        return helper
+
+    return deco

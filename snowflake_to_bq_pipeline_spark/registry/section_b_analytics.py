@@ -11,7 +11,7 @@ from ..catalog import load_table
 from ..operators import asof, scd
 from ..plans import bom, budget, dashboard, engagement, enrichment
 from ..streaming import incremental, joins as stream_joins
-from ._core import _corpus_fingerprint, query
+from ._core import query, standing_index
 
 
 #: Shared (order, contributor)-grain rollup of the entry-line fact per
@@ -23,23 +23,12 @@ from ._core import _corpus_fingerprint, query
 #: integer-partials table at pair grain. Same single-live-snapshot
 #: lifecycle as _ASSIGN_CACHE (section_e_similarity); exact re-aggregation
 #: proofs live on plans/budget.line_rollup and the *_from consumers.
-_BUDGET_ROLLUP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@standing_index("lineitem")
 def _budget_rollup_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "lineitem"))
-    df = _BUDGET_ROLLUP_CACHE.get(key)
-    if df is None:
-        for old in _BUDGET_ROLLUP_CACHE.values():
-            old.unpersist(blocking=False)
-        _BUDGET_ROLLUP_CACHE.clear()
-        from pyspark.storagelevel import StorageLevel
+    return budget.line_rollup(load_table(spark, sf_dir, "lineitem"))
 
-        df = budget.line_rollup(
-            load_table(spark, sf_dir, "lineitem")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _BUDGET_ROLLUP_CACHE[key] = df
-    return df
+
+_BUDGET_ROLLUP_CACHE = _budget_rollup_for.cache
 
 
 # ---------------------------------------------------------------------------

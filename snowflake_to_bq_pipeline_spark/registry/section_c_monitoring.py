@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table
 from ..operators import alerts as alerts_op, anomaly, quality, semistructured, skew
-from ._core import _corpus_fingerprint, query
+from ._core import query, standing_index
 
 
 # ---------------------------------------------------------------------------
@@ -430,28 +430,16 @@ _ALERTS_SQL_CTES = """daily AS (
 #: itself is violation-sized, so persisting it is O(alerts), not
 #: O(corpus). Same single-live-snapshot lifecycle as _ASSIGN_CACHE
 #: (section_e_similarity).
-_ALERTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@standing_index("events", "orders", "lineitem")
 def _alerts_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        sf_dir,
-        _corpus_fingerprint(sf_dir, "events", "orders", "lineitem"),
+    return alerts_op.pipeline_alerts(
+        load_table(spark, sf_dir, "events"),
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "lineitem"),
     )
-    df = _ALERTS_CACHE.get(key)
-    if df is None:
-        for old in _ALERTS_CACHE.values():
-            old.unpersist(blocking=False)
-        _ALERTS_CACHE.clear()
-        from pyspark.storagelevel import StorageLevel
 
-        df = alerts_op.pipeline_alerts(
-            load_table(spark, sf_dir, "events"),
-            load_table(spark, sf_dir, "orders"),
-            load_table(spark, sf_dir, "lineitem"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _ALERTS_CACHE[key] = df
-    return df
+
+_ALERTS_CACHE = _alerts_for.cache
 
 
 @query(

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table
 from ..operators import bpe, curation, quality, ranges, text as text_ops, unigram
-from ._core import _ModelMemo, _corpus_fingerprint, query
+from ._core import query, standing_index
 
 
 @query(
@@ -136,23 +136,12 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: stage of tfidf_top_terms / vocab_top_k / vocab_coverage_curve (same
 #: tokenizer, same explode+groupBy). Materialized once per corpus
 #: snapshot, same single-live-handle lifecycle as _DSIR_W_CACHE.
-_TOK_COUNTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@standing_index("documents")
 def _tok_counts_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "documents"))
-    df = _TOK_COUNTS_CACHE.get(key)
-    if df is None:
-        for old in _TOK_COUNTS_CACHE.values():
-            old.unpersist(blocking=False)
-        _TOK_COUNTS_CACHE.clear()
-        from pyspark.storagelevel import StorageLevel
+    return text_ops.unigram_tok_counts(load_table(spark, sf_dir, "documents"))
 
-        df = text_ops.unigram_tok_counts(
-            load_table(spark, sf_dir, "documents")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _TOK_COUNTS_CACHE[key] = df
-    return df
+
+_TOK_COUNTS_CACHE = _tok_counts_for.cache
 
 
 @query(
@@ -865,19 +854,17 @@ def group_percentiles_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: same driver-resident-model posture as the IVF centroids. Keyed by
 #: (corpus dir, snapshot fingerprint); deterministic (exact counts,
 #: lexicographic tie-break), so a cache hit is bit-identical to a re-run.
-#: LRU-bounded + superseded-fingerprint eviction via _ModelMemo.
-_BPE_MERGE_CACHE = _ModelMemo()
-
-
+#: Returned as a DataFrame over the memoized rows.
+@standing_index(
+    "documents",
+    kind="model",
+    view=lambda spark, rows: spark.createDataFrame(rows, bpe.MERGES_SCHEMA),
+)
 def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "documents"))
-    rows = _BPE_MERGE_CACHE.get(key)
-    if rows is None:
-        rows = bpe.bpe_merge_rows(
-            load_table(spark, sf_dir, "documents"), n_merges=10
-        )
-        _BPE_MERGE_CACHE.put(key, rows)
-    return spark.createDataFrame(rows, bpe.MERGES_SCHEMA)
+    return bpe.bpe_merge_rows(load_table(spark, sf_dir, "documents"), n_merges=10)
+
+
+_BPE_MERGE_CACHE = _bpe_merges_for.cache
 
 
 @query("bpe_merge_table")  # rows-only: iterative model induction, no SQL twin
@@ -894,23 +881,12 @@ def bpe_merge_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: over the SAME lowercased WORD_RE grain; one corpus regexp/explode
 #: pass per snapshot instead of one per encoder per call. Same
 #: single-live-handle lifecycle as the shingle memo.
-_DOC_WORD_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@standing_index("documents")
 def _doc_word_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "documents"))
-    df = _DOC_WORD_CACHE.get(key)
-    if df is None:
-        for old in _DOC_WORD_CACHE.values():
-            old.unpersist(blocking=False)
-        _DOC_WORD_CACHE.clear()
-        from pyspark.storagelevel import StorageLevel
+    return bpe.doc_word_counts(load_table(spark, sf_dir, "documents"))
 
-        df = bpe.doc_word_counts(
-            load_table(spark, sf_dir, "documents")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DOC_WORD_CACHE[key] = df
-    return df
+
+_DOC_WORD_CACHE = _doc_word_for.cache
 
 
 #: Per-(snapshot, tokenizer) encoded vocabulary (word, word_tokens):
@@ -918,38 +894,21 @@ def _doc_word_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the distinct word vocab — is standing state THREE queries per
 #: tokenizer consume (the encode view, the fertility report's side),
 #: so it materializes once per model instead of once per call.
-_WORD_TOKENS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@standing_index("documents")
 def _word_tokens_for(
     spark: SparkSession, sf_dir: str, kind: str
 ) -> DataFrame:
-    fp = _corpus_fingerprint(sf_dir, "documents")
-    key = (sf_dir, fp, kind)
-    df = _WORD_TOKENS_CACHE.get(key)
-    if df is None:
-        # Single-live-SNAPSHOT lifecycle: both tokenizers of the CURRENT
-        # (sf_dir, fingerprint) stay live together, but superseded
-        # fingerprints AND other snapshot directories are evicted — a
-        # multi-sf_dir session (scale/skew smokes) stays bounded.
-        for old_key in [
-            o for o in _WORD_TOKENS_CACHE if (o[0], o[1]) != (sf_dir, fp)
-        ]:
-            _WORD_TOKENS_CACHE.pop(old_key).unpersist(blocking=False)
-        from pyspark.storagelevel import StorageLevel
+    words = _doc_word_for(spark, sf_dir).select("word").distinct()
+    if kind == "bpe":
+        return bpe.bpe_word_tokens(words, _bpe_merges_for(spark, sf_dir))
+    if kind == "unigram":
+        return unigram.unigram_word_tokens(
+            words, _unigram_vocab_for(spark, sf_dir)
+        )
+    raise ValueError(f"unknown tokenizer kind: {kind}")  # pragma: no cover
 
-        words = _doc_word_for(spark, sf_dir).select("word").distinct()
-        if kind == "bpe":
-            df = bpe.bpe_word_tokens(words, _bpe_merges_for(spark, sf_dir))
-        elif kind == "unigram":
-            df = unigram.unigram_word_tokens(
-                words, _unigram_vocab_for(spark, sf_dir)
-            )
-        else:  # pragma: no cover - caller bug
-            raise ValueError(f"unknown tokenizer kind: {kind}")
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _WORD_TOKENS_CACHE[key] = df
-    return df
+
+_WORD_TOKENS_CACHE = _word_tokens_for.cache
 
 
 @query("bpe_encode_tokens")  # rows-only: applies the learned (non-SQL) model
@@ -972,19 +931,19 @@ def bpe_encode_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Once-per-corpus unigram-LM vocabulary (SentencePiece-style Viterbi-EM
 #: prune, operators/unigram.py) — the same driver-resident-model posture
-#: and _ModelMemo lifecycle as _BPE_MERGE_CACHE.
-_UNIGRAM_VOCAB_CACHE = _ModelMemo()
-
-
+#: and model lifecycle as _BPE_MERGE_CACHE.
+@standing_index(
+    "documents",
+    kind="model",
+    view=lambda spark, rows: spark.createDataFrame(rows, unigram.VOCAB_SCHEMA),
+)
 def _unigram_vocab_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "documents"))
-    rows = _UNIGRAM_VOCAB_CACHE.get(key)
-    if rows is None:
-        rows = unigram.unigram_vocab_rows(
-            load_table(spark, sf_dir, "documents"), vocab_size=400
-        )
-        _UNIGRAM_VOCAB_CACHE.put(key, rows)
-    return spark.createDataFrame(rows, unigram.VOCAB_SCHEMA)
+    return unigram.unigram_vocab_rows(
+        load_table(spark, sf_dir, "documents"), vocab_size=400
+    )
+
+
+_UNIGRAM_VOCAB_CACHE = _unigram_vocab_for.cache
 
 
 @query("unigram_vocab_table")  # rows-only: iterative EM induction, no SQL twin
@@ -1174,23 +1133,14 @@ _DSIR_SELECT_FRAC = 0.2
 #: The weight table feeds both the weight view and the selection pass —
 #: materialized once per corpus (same shared-intermediate posture as the
 #: Jaccard pair cache above).
-_DSIR_W_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@standing_index("documents")
 def _dsir_weights_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "documents"))
-    df = _DSIR_W_CACHE.get(key)
-    if df is None:
-        for old in _DSIR_W_CACHE.values():
-            old.unpersist(blocking=False)
-        _DSIR_W_CACHE.clear()
-        from pyspark.storagelevel import StorageLevel
+    return curation.dsir_importance_weights(
+        load_table(spark, sf_dir, "documents"), _DSIR_TARGET
+    )
 
-        df = curation.dsir_importance_weights(
-            load_table(spark, sf_dir, "documents"), _DSIR_TARGET
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DSIR_W_CACHE[key] = df
-    return df
+
+_DSIR_W_CACHE = _dsir_weights_for.cache
 
 
 @query(
@@ -1306,40 +1256,27 @@ _NBQ_DOCSCORES_CTES = f"""sp AS (
 #: per-source calibration report consume the same per-doc verdicts, so
 #: the gram-stream aggregation runs once per corpus (same
 #: shared-intermediate posture as _DSIR_W_CACHE).
-_NBQ_SCORES_CACHE: dict[tuple[str, str], DataFrame] = {}
+@standing_index("documents")
+def _nbq_scores_for(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return curation.nb_quality_classifier(
+        load_table(spark, sf_dir, "documents"), _NBQ_CURATED
+    )
+
+
+_NBQ_SCORES_CACHE = _nbq_scores_for.cache
 
 
 #: Driver-resident NB model (4096 LLR strings + prior) — the standing
 #: model the streaming scorer ships as a constant-folded literal; same
-#: LRU/superseded-fingerprint lifecycle as the other _ModelMemo models.
-_NBQ_MODEL_CACHE = _ModelMemo()
-
-
+#: LRU/superseded-fingerprint lifecycle as the other model memos.
+@standing_index("documents", kind="model")
 def _nbq_model_for(spark: SparkSession, sf_dir: str) -> dict:
-    fp = _corpus_fingerprint(sf_dir, "documents")
-    model = _NBQ_MODEL_CACHE.get((sf_dir, fp))
-    if model is None:
-        model = curation.train_nbq_model(
-            load_table(spark, sf_dir, "documents"), _NBQ_CURATED
-        )
-        _NBQ_MODEL_CACHE.put((sf_dir, fp), model)
-    return model
+    return curation.train_nbq_model(
+        load_table(spark, sf_dir, "documents"), _NBQ_CURATED
+    )
 
 
-def _nbq_scores_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, _corpus_fingerprint(sf_dir, "documents"))
-    df = _NBQ_SCORES_CACHE.get(key)
-    if df is None:
-        for old in _NBQ_SCORES_CACHE.values():
-            old.unpersist(blocking=False)
-        _NBQ_SCORES_CACHE.clear()
-        from pyspark.storagelevel import StorageLevel
-
-        df = curation.nb_quality_classifier(
-            load_table(spark, sf_dir, "documents"), _NBQ_CURATED
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _NBQ_SCORES_CACHE[key] = df
-    return df
+_NBQ_MODEL_CACHE = _nbq_model_for.cache
 
 
 @query(

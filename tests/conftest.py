@@ -73,26 +73,3 @@ def assert_matches_oracle(spark_df, ddb, oracle_sql, sort_cols=None):
     mismatches = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mismatches, f"{len(mismatches)} mismatching rows; first: {mismatches[:3]}"
 
-
-def pytest_collection_modifyitems(config, items):
-    """Driver verify-gate subset (r15, VERDICT ask #2).
-
-    The full suite takes ~17 min on a quiet VM and 50-75 min on the
-    degraded regimes this box exhibits; the driver's verify window cut
-    it off at ~21% in r14, turning a green suite into `tests_ok: false`.
-    The default run therefore skips tests marked ``slow`` — the
-    full-depth parametrized sweeps and the heaviest end-to-end suites,
-    every one of which has a faster representative left in the default
-    set — so the gate completes inside the window. The COMPLETE suite
-    remains one env var away and stays the builder's bar:
-
-        SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
-    """
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="slow-marked; run full suite with SPARK_GRAFT_FULL_TESTS=1"
-    )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(skip)

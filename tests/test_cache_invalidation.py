@@ -219,3 +219,29 @@ def test_word_tokens_cache_bounded_across_snapshot_dirs(spark, tmp_path):
     t._word_tokens_for(spark, d2, "bpe")
     assert all(k[0] == d2 for k in t._WORD_TOKENS_CACHE)
     assert t._word_tokens_for(spark, d1, "bpe") is not a
+
+
+def test_standing_index_positional_and_keyword_share_one_entry(spark, tmp_path):
+    """Params are bound through the helper's signature, so ``k`` passed
+    positionally or by keyword is one memo entry and one handle."""
+    d = str(tmp_path)
+    _write_embeddings(spark, d, 20)
+    registry.clear_model_caches()
+    a = registry._assigned_for(spark, d, 16)
+    n = len(registry._ASSIGN_CACHE)
+    assert registry._assigned_for(spark, d, k=16) is a
+    assert len(registry._ASSIGN_CACHE) == n == 1
+
+
+def test_memo_helpers_are_the_decorated_standing_indexes():
+    assert set(registry._MEMO_HELPERS) == set(registry.STANDING_INDEXES)
+    for name, helper in registry.STANDING_INDEXES.items():
+        assert getattr(registry, name) is helper
+
+
+def test_all_caches_holds_one_cache_per_standing_index():
+    caches = registry._all_caches()
+    assert set(caches) == set(registry.STANDING_INDEXES)
+    assert len({id(c) for c in caches.values()}) == len(registry.STANDING_INDEXES)
+    for name, helper in registry.STANDING_INDEXES.items():
+        assert caches[name] is helper.cache
